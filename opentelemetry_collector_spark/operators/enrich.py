@@ -20,9 +20,18 @@ from pyspark.sql import functions as F
 from opentelemetry_collector_spark import fixtures
 
 
+# the schemas of the fixture dims (fixtures.ensure_dims writes them);
+# declared so loading them launches no footer-inference job
+ROLE_DIM_SCHEMA = "role string, role_kind string, is_human boolean"
+TOOL_DIM_SCHEMA = "tool string, tool_family string, sink_hint string"
+
+
 def load_dims(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     role_path, tool_path = fixtures.ensure_dims()
-    return spark.read.parquet(role_path), spark.read.parquet(tool_path)
+    return (
+        spark.read.schema(ROLE_DIM_SCHEMA).parquet(role_path),
+        spark.read.schema(TOOL_DIM_SCHEMA).parquet(tool_path),
+    )
 
 
 def enrich(

@@ -2,17 +2,21 @@
 progress, and obsreport metrics.
 
 This is the Collector.Run analog (otelcol/collector.go:415 →
-service/internal/graph.StartAll): evaluate the routed frame once
-(persist — the fanoutconsumer obligation), then execute one
-unit-of-work per sink under the lineage manifest so a killed run
-resumes without duplicating routed rows, then write the metrics table.
+service/internal/graph.StartAll): evaluate the routed frame once and
+shuffle it once (persist it pre-sharded on the sinks' shard keys — the
+fanoutconsumer obligation, and Catalyst then elides the exchange in
+every sink write and in the aggregate), then execute one unit-of-work
+per sink under the lineage manifest so a killed run resumes without
+duplicating routed rows, then write the aggregate and the metrics
+table. Each sink's write also counts the rows it sent (an
+``Observation``), so obsreport needs no job of its own.
 """
 
 from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.operators import route as route_mod
@@ -62,10 +66,19 @@ def run_pipeline(
         )
     cfg = cfg or pipeline.PipelineConfig()
     reporter = status_mod.StatusReporter()
-    routed = pipeline.routed_frame(spark, sf_dir, cfg).persist()
+    routed = pipeline.routed_frame(spark, sf_dir, cfg)
+    if not (single_pass or time_partition):
+        # shuffle once: every sink write repartitions on these keys and
+        # the aggregate groups by a superset of them, so both read the
+        # cache in place instead of re-shuffling it
+        routed = routed.repartition(*writers.SINK_SHARD_KEYS)
+    routed = routed.persist()
     try:
         sinks = route_mod.all_sinks(list(cfg.routes))
         manifest = checkpoint.LineageManifest(str(Path(out_dir) / "_checkpoint"), run_id)
+        # per-sink counts observed during the writes; None (derive them
+        # from the routed frame) unless this call wrote every sink
+        sent: dict[str, int] | None = None
         if single_pass:
             paths = {
                 s: writers.single_pass_sink_path(out_dir, run_id, s)
@@ -98,9 +111,16 @@ def run_pipeline(
             else:
                 paths = {s: writers.sink_path(out_dir, run_id, s) for s in sinks}
 
+            observed: dict[str, Observation] = {}
+
             def execute(sink: str) -> None:
                 def _write() -> None:
-                    part = routed.filter(F.col("sink") == sink)
+                    # obsreport in flight: the write's own job counts
+                    # the rows it sends
+                    observed[sink] = Observation()
+                    part = routed.filter(F.col("sink") == sink).observe(
+                        observed[sink], F.count(F.lit(1)).alias("sent")
+                    )
                     if time_partition:
                         writers.write_sink_time_partitioned(
                             part, out_dir, run_id, sink,
@@ -115,7 +135,11 @@ def run_pipeline(
 
                 status_mod.run_reported(reporter, f"exporter/{sink}", _write)
 
-            checkpoint.run_with_resume(manifest, sinks, execute, crash_after=crash_after)
+            ran = checkpoint.run_with_resume(
+                manifest, sinks, execute, crash_after=crash_after
+            )
+            if ran == sinks:
+                sent = {s: observed[s].get["sent"] for s in sinks}
 
         # aggregate + metrics land only after all sinks committed
         agg = pipeline.aggregate_frame(routed, cfg)
@@ -126,7 +150,7 @@ def run_pipeline(
 
         telemetry = telemetry or TelemetryConfig()
         if telemetry.write_metrics:
-            m = metrics_mod.collect_pipeline_metrics(routed)
+            m = metrics_mod.collect_pipeline_metrics(routed, sent)
             m.to_df(spark).write.mode("overwrite").parquet(
                 str(Path(out_dir) / f"run_id={run_id}" / "metrics")
             )

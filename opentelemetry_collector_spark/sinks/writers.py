@@ -15,11 +15,14 @@
   internal/retry_sender.go:71-152): exponential backoff around the
   commit, permanent errors short-circuit.
 
-Scale note: per-sink writes repartition on the sink's shard keys and
-cap records per file (batch.shape_for_write) — the batchprocessor's
-send_batch_max_size split expressed as physical file shaping. On a
-real cluster the same call sites target Iceberg
-(write.format("iceberg"), replaceWhere) — parquet-dir fallback here.
+Scale note: per-sink writes repartition on the sink's shard keys
+(``SINK_SHARD_KEYS``) and cap records per file (batch.shape_for_write)
+— the batchprocessor's send_batch_max_size split expressed as physical
+file shaping. plans/runner.py pre-shards the routed frame on the same
+keys before it caches it, so Catalyst elides this per-sink exchange
+there; callers handing in an unsharded frame still get it. On a real
+cluster the same call sites target Iceberg (write.format("iceberg"),
+replaceWhere) — parquet-dir fallback here.
 """
 
 from __future__ import annotations
@@ -33,6 +36,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.operators import batch as batch_mod
+
+# shard keys of every per-sink table; the runner pre-shards on these too
+SINK_SHARD_KEYS: tuple[str, ...] = ("conv_id",)
 
 
 class PermanentError(Exception):
@@ -112,7 +118,7 @@ def write_sink(
     fallback; on Iceberg this is an overwritePartitions commit).
     """
     path = sink_path(base_dir, run_id, sink)
-    shaped, opts = batch_mod.shape_for_write(df, rows_per_file, shard_keys=("conv_id",))
+    shaped, opts = batch_mod.shape_for_write(df, rows_per_file, shard_keys=SINK_SHARD_KEYS)
 
     def _commit() -> None:
         w = shaped.write.mode("overwrite")
@@ -184,12 +190,13 @@ def write_fanout_single_pass(
 ) -> str:
     """One-pass fan-out: write.partitionBy('sink') — every sink's table
     materializes in a single scan of the routed frame with ZERO extra
-    shuffles (vs one repartition per sink in the per-unit mode).
+    shuffles (vs the per-unit mode's shuffle of the whole routed frame
+    onto the sinks' shard keys).
 
     Tradeoff vs write_sink units: resume granularity is the whole
     fan-out (one lineage unit), not per sink. At 100 TB this is the
     default — the scan dominates and re-running one idempotent
-    overwrite of the whole epoch is cheaper than 5 extra shuffles on
+    overwrite of the whole epoch is cheaper than a full shuffle on
     every healthy run. The per-sink mode remains for fine-grained
     resume (persistent-queue parity).
     """

@@ -24,6 +24,15 @@ DRIVER_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
+# the schema Spark infers from the transcripts fixture (its ts is a
+# timezone-less timestamp[us]); declared so a read launches no
+# footer-inference job. Not transcript_ddl(): that types ts as a
+# session-zone timestamp.
+TRANSCRIPTS_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp_ntz"
+)
+
 
 def read_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pipeline's canonical input (BASELINE.json input_hint shape).
@@ -31,8 +40,12 @@ def read_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ensures the deterministic fixture exists for this scale factor, then
     scans it. Column pruning and predicate pushdown flow into the scan
     because this returns a plain declarative reader (no collect, no rdd).
+    The file is always one the package wrote, so its schema is declared
+    rather than inferred.
     """
-    return spark.read.parquet(fixtures.ensure_transcripts(sf_dir))
+    return spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(
+        fixtures.ensure_transcripts(sf_dir)
+    )
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

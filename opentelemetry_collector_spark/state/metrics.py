@@ -8,22 +8,28 @@ Mirrors the reference's observability contract:
 - exporter sent/send-failed items (exporter/exporterhelper/
   documentation.md:9-105).
 
-Spark-first: counts are *derived from the same DAG* rather than
-incremented imperatively — each stage contributes one aggregate over
-the persisted routed frame, so the metrics are exactly consistent with
-the data (no drift between counter and payload, which the reference
-has to work to guarantee). Metric names follow the reference's
-``otelcol_<component>_<verb>_log_records`` convention.
+Spark-first: counts come from *the same DAG* rather than being
+incremented imperatively. The exporter ``sent`` counts are observed in
+flight: the runner attaches a ``count(1)`` ``Observation`` to each
+sink's write, so the job that moved the rows also counted them (no
+drift between counter and payload, which the reference has to work to
+guarantee, and no extra job). Without them (a resumed run that skipped
+committed sinks, or the single-pass fan-out) one ``groupBy`` over the
+persisted routed frame derives the same counts. The other stages'
+counters follow from the per-sink totals. Metric names follow the
+reference's ``otelcol_<component>_<verb>_log_records`` convention.
 """
 
 from __future__ import annotations
 
+from collections.abc import Mapping
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.operators.route import QUARANTINE_SINK
+from opentelemetry_collector_spark.state import local_frame
 
 METRICS_SCHEMA = "stage string, metric string, value long"
 
@@ -36,21 +42,31 @@ class StageMetrics:
         self.rows.append((stage, metric, int(value)))
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self.rows, schema=METRICS_SCHEMA)
+        return local_frame(spark, self.rows, METRICS_SCHEMA)
 
 
-def collect_pipeline_metrics(routed: DataFrame) -> StageMetrics:
-    """One pass over the persisted routed frame → the obsreport table.
+def collect_pipeline_metrics(
+    routed: DataFrame, sent: Mapping[str, int] | None = None
+) -> StageMetrics:
+    """Per-sink row counts → the obsreport table.
+
+    ``sent`` maps every sink to the rows its write observed; given it,
+    no job runs. Without it, one pass over the persisted routed frame
+    counts them. Either way only sinks that received rows get exporter
+    rows.
 
     accepted: rows entering each stage; refused: admission rejections
     (0 in batch mode — Spark backpressure replaces the memorylimiter,
     we keep the metric contract); dropped: quarantined rows (permanent
     errors, the retry_sender drop path).
     """
-    counts = {
-        r["sink"]: r["n"]
-        for r in routed.groupBy("sink").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    if sent is None:
+        counts = {
+            r["sink"]: r["n"]
+            for r in routed.groupBy("sink").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+    else:
+        counts = {s: n for s, n in sent.items() if n}
     total = sum(counts.values())
     dropped = counts.get(QUARANTINE_SINK, 0)
     m = StageMetrics()

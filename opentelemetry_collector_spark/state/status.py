@@ -21,6 +21,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from opentelemetry_collector_spark.state import local_frame
+
 STARTING = "StatusStarting"
 OK = "StatusOK"
 RECOVERABLE_ERROR = "StatusRecoverableError"
@@ -86,7 +88,7 @@ class StatusReporter:
         return OK
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self.events, schema=STATUS_SCHEMA)
+        return local_frame(spark, self.events, STATUS_SCHEMA)
 
 
 def run_reported(reporter: StatusReporter, component: str, fn):
